@@ -153,6 +153,22 @@ def run_jvm(args, work, deadline):
     return json.loads(lines[-1])["result"], rss_kb / 1024.0
 
 
+def remove_stale_work():
+    """Delete the work directories (`<workload>-<pid>`) of runs that were
+    killed before they could clean up; records, logs and other files at
+    the top of the work directory stay."""
+    for d in glob.glob(os.path.join(WORK, "*-*")):
+        pid = d.rsplit("-", 1)[1]
+        if not os.path.isdir(d) or not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(d, ignore_errors=True)
+        except PermissionError:
+            pass
+
+
 def fingerprint(con, sql):
     """Row count plus an order-insensitive hash of the rows, with columns
     taken in name order and numbers in one canonical text form."""
@@ -225,7 +241,7 @@ def main():
         fail("run from the repository root: engine sources or benchmark data missing")
     build()
     work = os.path.abspath(os.path.join(WORK, f"{args.workload or 'fp'}-{os.getpid()}"))
-    shutil.rmtree(WORK, ignore_errors=True)
+    remove_stale_work()
     os.makedirs(os.path.join(work, "tmp"))
     os.makedirs(os.path.join(work, "scratch"))
     try:

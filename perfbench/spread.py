@@ -19,7 +19,6 @@ import sys
 def main():
     p = argparse.ArgumentParser()
     p.add_argument("--runs", type=int, default=10)
-    p.add_argument("--first-seed", type=int, default=1)
     p.add_argument("workloads", nargs="+")
     args = p.parse_args()
     bench = json.load(open("BENCHMARK.json"))
@@ -27,7 +26,7 @@ def main():
     os.makedirs("perfbench/work", exist_ok=True)
     for w in args.workloads:
         rows = []
-        for seed in range(args.first_seed, args.first_seed + args.runs):
+        for seed in range(1, args.runs + 1):
             out = subprocess.run(
                 [sys.executable, "perfbench/run.py", "--workload", w, "--seed", str(seed),
                  "--seconds", str(bench["run_seconds"]), "--trace", "0"],

@@ -36,19 +36,20 @@ object Board {
     val t0 = System.nanoTime()
     tables.foreach(t => spark.read.parquet(s"${a.data}/$t.parquet").count())
     val setupS = sessionS + (System.nanoTime() - t0) / 1e9
-    // one warm-up sweep: JIT and codegen caches fill before timing
+    // one cold sweep fills the codegen caches and does the first JIT
+    // compiles; the JVM keeps warming for about four more sweeps, which a
+    // run cannot afford, so timed sweeps sit at the same place on that
+    // slope in every run
     sweep(spark, a, None)
     if (a.trace) traced(spark, a, setupS)
     else {
-      // whole sweeps while the next one would end closer to `seconds`
-      // than stopping now
+      // at least two timed sweeps, and whole sweeps until `seconds` have passed
       val done = scala.collection.mutable.ArrayBuffer[Seq[(String, Double)]]()
       def elapsed = done.map(_.map(_._2).sum).sum
-      while (done.isEmpty || elapsed + done.last.map(_._2).sum / 2 < a.seconds)
+      while (done.size < 2 || elapsed < a.seconds)
         done += sweep(spark, a, None)
       val perRow = rows.map(r => r -> Main.median(done.map(_.toMap.apply(r)).toSeq)).toMap
       val sweepS = done.map(_.map(_._2).sum).toSeq
-      // sum of per-row medians: one slow sample of one row moves it little
       val boardS = perRow.values.sum
       Map(
         "attempted" -> done.size * rows.size,
@@ -57,18 +58,20 @@ object Board {
           "setup_s" -> setupS,
           "board_s" -> boardS,
           "throughput_per_s" -> rows.size / boardS,
-          "latency_ms" -> boardS * 1000 / rows.size),
+          // the slowest row: a figure of its own, not the reciprocal of throughput
+          "latency_ms" -> perRow.values.max * 1000),
         "record" -> Map("sweeps_s" -> sweepS, "row_s" -> perRow,
-          "settings" -> Main.settings, "rows" -> rows),
+          "sweep_row_s" -> done.map(_.toMap), "settings" -> Main.settings, "rows" -> rows),
         "check" -> Map("board_out" -> s"${a.work}/board-out"))
     }
   }
 
   /** Traced sweep: each row in a span, with the Spark jobs, tasks, GC,
-    * shuffle, spill and planning time that fall inside it; overhead is the
-    * traced sweep's wall time minus an untraced sweep's. */
+    * shuffle, spill and planning time that fall inside it. It runs between
+    * two untraced sweeps; overhead is its wall time minus their mean, so
+    * that warm-up going on across the three sweeps cancels out. */
   private def traced(spark: SparkSession, a: Main.Args, setupS: Double): Map[String, Any] = {
-    val untraced = sweep(spark, a, None).map(_._2).sum
+    val before = sweep(spark, a, None).map(_._2).sum
     val jobs = new JobRecorder
     val plans = new PlanRecorder
     spark.sparkContext.addSparkListener(jobs)
@@ -82,6 +85,8 @@ object Board {
     Thread.sleep(500) // listener bus drains the last job events
     spark.sparkContext.removeSparkListener(jobs)
     spark.listenerManager.unregister(plans)
+    val after = sweep(spark, a, None).map(_._2).sum
+    val untraced = (before + after) / 2
     val byspan = tracer.attribute(jobs.jobs)
     val layers = tracer.all.flatMap { s =>
       val t = byspan.getOrElse(s.id, TaskTotals())
@@ -110,7 +115,7 @@ object Board {
       "record" -> Map(
         "spans" -> tracer.all.map(s => Map("name" -> s.name, "parent" -> s.parent,
           "start_ms" -> s.startMs, "end_ms" -> s.endMs, "self_ms" -> tracer.selfMs(s))),
-        "traced_s" -> tracedS, "untraced_s" -> untraced, "setup_s" -> setupS,
+        "traced_s" -> tracedS, "untraced_s" -> Seq(before, after), "setup_s" -> setupS,
         "settings" -> Main.settings),
       "check" -> Map("board_out" -> s"${a.work}/board-out"))
   }

@@ -317,7 +317,7 @@ object Sync {
   /** The per-layer table of a traced run: streaming phases and jobs per
     * batch from the streaming run, then a replay of its timed micro-batches
     * through the public layer calls with a span around each, and the same
-    * replay untraced for the tracing overhead. */
+    * replay untraced before and after it for the tracing overhead. */
   private def layers(spark: SparkSession, k: Kind, a: Main.Args, in: Inputs, obs: Observed,
       jobs: Seq[JobRecord], timed: Seq[Long], storeBytes: Long, storeFiles: Int,
       storeRows: Long, validity: Map[String, Any]): (Map[String, Double], Seq[Map[String, Any]]) = {
@@ -338,18 +338,22 @@ object Sync {
     val replayBatches = timed.take(k match { case Backfill => 4; case Trickle => 12 })
     val glob = (b: Long) => obs.batchFiles(b).mkString(s"$src/{", ",", "}")
 
-    // untraced replay: the same calls, no spans, nothing cached
-    val u0 = System.nanoTime()
-    replayBatches.foreach { b =>
-      val admitted = SyncPipeline.rateLimit(k.spec.cfg)(StreamingSync.transform(k.spec.cfg)(
-        Connectors.ParquetMessages.read(spark, glob(b))))
-        .select("msg_id", "topic", "publish_time", "data", "index", "app",
-          "ts_resolved", "is_debug", "field_count")
-      val m = IndexedParquetSink.writeBatchExactlyOnce(admitted, s"${a.work}/replay-u", b)
-      SyncMetrics.recordBulk(m)
-      m.withColumn("batch_id", lit(b)).write.mode("overwrite").parquet(s"${a.work}/replay-u-metrics/bid=$b")
+    // untraced replay: the same calls, no spans, nothing cached, into a
+    // store of its own; it runs before and after the traced replay
+    def untraced(dir: String): Double = {
+      val u0 = System.nanoTime()
+      replayBatches.foreach { b =>
+        val admitted = SyncPipeline.rateLimit(k.spec.cfg)(StreamingSync.transform(k.spec.cfg)(
+          Connectors.ParquetMessages.read(spark, glob(b))))
+          .select("msg_id", "topic", "publish_time", "data", "index", "app",
+            "ts_resolved", "is_debug", "field_count")
+        val m = IndexedParquetSink.writeBatchExactlyOnce(admitted, s"${a.work}/$dir", b)
+        SyncMetrics.recordBulk(m)
+        m.withColumn("batch_id", lit(b)).write.mode("overwrite").parquet(s"${a.work}/$dir-metrics/bid=$b")
+      }
+      (System.nanoTime() - u0) / 1e9
     }
-    val untracedS = (System.nanoTime() - u0) / 1e9
+    val untracedBefore = untraced("replay-u1")
 
     // traced replay: each layer call materialized inside its own span
     val rec = new JobRecorder
@@ -385,6 +389,9 @@ object Sync {
     val tracedS = (System.nanoTime() - t0) / 1e9
     Thread.sleep(300)
     spark.sparkContext.removeSparkListener(rec)
+    // the mean of the untraced replays on either side: warm-up going on
+    // across the three replays cancels out of the overhead
+    val untracedS = (untracedBefore + untraced("replay-u2")) / 2
     val own = tracer.attribute(rec.jobs)
     def spans(name: String) = tracer.all.filter(_.name == name)
     def self(name: String) = Main.median(spans(name).map(tracer.selfMs(_).toDouble))
@@ -420,6 +427,8 @@ object Sync {
       "streaming.metrics_ms" -> self("streaming.metrics"),
       "streaming.gc_ms" -> obs.gcMs / math.max(1.0, obs.progress.size.toDouble),
       "trace.overhead_pct" -> 100 * (tracedS - untracedS) / untracedS,
+      "trace.traced_s" -> tracedS,
+      "trace.untraced_s" -> untracedS,
       "spark.jobs_per_unit" -> all.jobs / n,
       "spark.tasks_per_unit" -> all.tasks / n,
       "spark.cpu_ms_per_unit" -> all.cpuMs / n,
