@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * reference's write success/failure counters (prometheus.rs).
   *
   * At cluster scale the partitioned write IS the bulk batching: each task
-  * writes its index partitions independently (no shuffle beyond the
-  * optional repartition on index to bound file counts), and downstream
-  * consumers prune by index directory exactly like an ES index query. */
+  * writes its index partitions independently, and downstream consumers
+  * prune by index directory exactly like an ES index query. The
+  * exactly-once write first hashes the batch on `index`, so one task
+  * writes each index of a batch and the store gains one file per
+  * (batch, index) however widely the batch was spread before it. */
 object IndexedParquetSink {
 
   /** Append one batch of enriched sync documents (must carry `index`,
@@ -77,6 +79,12 @@ object IndexedParquetSink {
     *     batch under `_staging/<batchId>`, MOVE the staged files into
     *     their `index=` directories under the batch-scoped names, then
     *     atomically rename the marker into place (create-temp + rename).
+    *     The staging write hashes the batch on `index` into the
+    *     session's core count of partitions, so ONE task writes each
+    *     index: a batch adds one `b<batchId>-k.parquet` per index it
+    *     touches, however many partitions the batch arrives in (the
+    *     explicit count also keeps AQE from coalescing the write back
+    *     into one task).
     *
     * A crash at ANY point replays into case 2 and converges: the store
     * after restart equals the batch relation exactly — no loss (the
@@ -162,7 +170,8 @@ object IndexedParquetSink {
       try {
         def stageAndMove(df: DataFrame, root: String): Unit = {
           val staging = s"$root/_staging/$batchId"
-          df.write.mode("overwrite").partitionBy("index").parquet(staging)
+          df.repartition(spark.sparkContext.defaultParallelism, col("index"))
+            .write.mode("overwrite").partitionBy("index").parquet(staging)
           var k = 0
           fs.globStatus(new Path(s"$staging/index=*/part-*"))
             .sortBy(_.getPath.toString).foreach { s =>

@@ -5,13 +5,15 @@ import graft.sinks.IndexedParquetSink
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The reference's consume→sink loop (pulsar.rs consume_loop +
   * es.rs sink_elasticsearch_loop) as Structured Streaming.
   *
   * Mapping: the Pulsar subscription is a streaming source over the message
-  * shape `(msg_id, topic, publish_time, data)`; the per-message transforms
-  * (filters, parse, enrich) run as narrow streaming projections; the
+  * shape `(msg_id, topic, publish_time, data)`; each micro-batch is
+  * spread over all cores, then the per-message transforms (filters,
+  * parse, enrich) run as narrow streaming projections; the
   * reference's buffer_size/flush_interval buffering IS the micro-batch —
   * rate-limit admission and bulk batching are applied inside foreachBatch,
   * exactly where the reference applies them (at sink time, over the
@@ -47,10 +49,19 @@ object StreamingSync {
     stream.withWatermark("publish_time", horizon)
       .dropDuplicates("msg_id", "publish_time")
 
-  /** The narrow transform chain shared verbatim with the batch pipeline —
-    * single source of truth for the sync semantics. */
+  /** The per-message transform chain, shared verbatim with the batch
+    * pipeline — single source of truth for the sync semantics. It starts
+    * by spreading the micro-batch over every core: a consumer batch
+    * arrives as ONE source partition (one file / row group, one topic
+    * partition), so without the spread the filters, JSON parses and
+    * enrich all run in a single task. Hashing on `msg_id` balances
+    * (ids are distinct), is deterministic under task retry and needs no
+    * local sort; the partition count is the session's core count. The
+    * filters, parse and enrich after it are narrow. */
   def transform(cfg: SyncConfig)(stream: DataFrame): DataFrame =
-    stream.transform(SyncPipeline.globalFilter(cfg))
+    stream.repartition(stream.sparkSession.sparkContext.defaultParallelism,
+        col("msg_id"))
+      .transform(SyncPipeline.globalFilter(cfg))
       .transform(SyncPipeline.parseable)
       .transform(SyncPipeline.namespaceFilter(cfg))
       .transform(SyncPipeline.enrich(cfg))

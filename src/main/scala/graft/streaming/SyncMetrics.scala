@@ -16,10 +16,20 @@ object SyncMetrics {
 
   private val counters = new ConcurrentHashMap[String, LongAdder]()
 
+  /** Label values are escaped as the Prometheus text format requires
+    * (`\\`, `\"`, `\n`): `app` and `index` are payload-derived, and a
+    * raw quote or newline would split or corrupt a series line. */
   def incBy(name: String, labels: Seq[(String, String)], v: Long): Unit = {
     val key = name + labels.sortBy(_._1)
-      .map { case (k, x) => s"""$k="$x"""" }.mkString("{", ",", "}")
+      .map { case (k, x) => s"""$k="${escape(x)}"""" }.mkString("{", ",", "}")
     counters.computeIfAbsent(key, _ => new LongAdder).add(v)
+  }
+
+  private def escape(v: String): String = String.valueOf(v).flatMap {
+    case '\\' => "\\\\"
+    case '"' => "\\\""
+    case '\n' => "\\n"
+    case c => c.toString
   }
 
   def value(key: String): Long =
@@ -35,18 +45,29 @@ object SyncMetrics {
   }
 
   /** Listener exporting per-batch progress counters
-    * (pulsar_message_consumed_total analog at the query level). */
+    * (pulsar_message_consumed_total analog at the query level). Every
+    * series of one query carries the same `query` label: its name, else
+    * its id. The termination event carries no name, so the label chosen
+    * at start is kept until then. */
   final class Listener extends StreamingQueryListener {
-    override def onQueryStarted(e: QueryStartedEvent): Unit =
-      incBy("graft_query_started_total", Seq("query" -> e.name), 1)
+    private val names = new ConcurrentHashMap[java.util.UUID, String]()
+    private def label(name: String, id: java.util.UUID): String =
+      Option(name).getOrElse(id.toString)
+    override def onQueryStarted(e: QueryStartedEvent): Unit = {
+      val q = label(e.name, e.id)
+      names.put(e.id, q)
+      incBy("graft_query_started_total", Seq("query" -> q), 1)
+    }
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
-      val q = Option(e.progress.name).getOrElse(e.progress.id.toString)
+      val q = label(e.progress.name, e.progress.id)
       incBy("graft_batches_total", Seq("query" -> q), 1)
       incBy("graft_rows_consumed_total", Seq("query" -> q),
         e.progress.numInputRows)
     }
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-      incBy("graft_query_terminated_total", Seq("query" -> e.id.toString), 1)
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
+      val q = Option(names.remove(e.id)).getOrElse(e.id.toString)
+      incBy("graft_query_terminated_total", Seq("query" -> q), 1)
+    }
   }
 
   /** Record a sink bulk-metrics batch (index, app, written[, failed]) —

@@ -135,7 +135,8 @@ object ScaleProbe {
     // partial probe never masquerades as the board
     val onlyProbes = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val baseDir = "/root/testdata/sf0.1"
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .appName("graft-scale-probe")

@@ -18,7 +18,8 @@ object SinkProfile {
     val query = args.headOption.getOrElse("sync_pipeline_stream")
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-sink-profile")

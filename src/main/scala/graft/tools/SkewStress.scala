@@ -23,7 +23,8 @@ import java.nio.file.{Files, Paths}
 object SkewStress {
   def main(args: Array[String]): Unit = {
     val replicas = args.headOption.map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .appName("graft-skew-stress")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
 object Throughput {
   def main(args: Array[String]): Unit = {
     val replicas = args.headOption.map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .appName("graft-throughput")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -56,6 +56,60 @@ class StreamingSyncSpec extends SparkSpec {
     assert(metrics.agg(sum("written")).head.getLong(0) == streamed.count())
   }
 
+  test("transform spreads a one-partition batch over every core") {
+    val one = Tables.events(spark, sf())
+      .select(col("event_id").as("msg_id"), col("event_type").as("topic"),
+        timestamp_micros(expr("ts div 1000")).as("publish_time"),
+        col("props").as("data"))
+      .coalesce(1)
+    assert(one.rdd.getNumPartitions == 1)
+    val out = StreamingSync.transform(cfg)(one)
+    assert(out.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    // the hash on msg_id really spreads the rows: more than one task
+    // holds a share of the batch
+    val perTask = out.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(perTask.count(_ > 0) > 1, perTask.mkString(","))
+  }
+
+  test("a single-file batch: store == batch pipeline, one file per index per batch") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val tmp = Files.createTempDirectory("graft-spread").toString
+    val msgs = Tables.events(spark, sf())
+      .select(col("event_id").as("msg_id"), col("event_type").as("topic"),
+        timestamp_micros(expr("ts div 1000")).as("publish_time"),
+        col("props").as("data"))
+    msgs.coalesce(1).write.parquet(s"$tmp/src")
+    StreamingSync.start(spark, cfg, s"$tmp/src", s"$tmp/sink",
+      s"$tmp/metrics", availableNow = true).awaitTermination(120000)
+
+    val store = spark.read.parquet(s"$tmp/sink")
+    val batch = SyncPipeline(cfg)(msgs)
+    assert(store.select("msg_id", "index", "app").orderBy("msg_id")
+      .collect().toSeq ==
+      batch.select("msg_id", "index", "app").orderBy("msg_id")
+        .collect().toSeq)
+
+    // the spread must not multiply the store's files: every index
+    // directory holds exactly one b<id>-* file per committed batch
+    val fs = FileSystem.get(new java.net.URI(tmp),
+      spark.sparkContext.hadoopConfiguration)
+    val committed = fs.listStatus(new Path(s"$tmp/sink/_commits"))
+      .map(_.getPath.getName).filter(_.forall(_.isDigit)).toSet
+    assert(committed.nonEmpty)
+    val dirs = fs.globStatus(new Path(s"$tmp/sink/index=*"))
+    assert(dirs.length == batch.select("index").distinct().count())
+    dirs.foreach { d =>
+      val perBatch = fs.listStatus(d.getPath).map(_.getPath.getName)
+        .filter(_.startsWith("b"))
+        .groupBy(_.stripPrefix("b").takeWhile(_ != '-'))
+      assert(perBatch.keySet.subsetOf(committed), s"${d.getPath}: $perBatch")
+      assert(perBatch.values.forall(_.length == 1),
+        s"${d.getPath}: ${perBatch.values.flatten.mkString(",")}")
+    }
+    // one source file, one batch: each index holds exactly one file
+    assert(committed.size == 1)
+  }
+
   test("--flush-interval rides SyncConfig into the processing-time trigger") {
     // the config default mirrors args.rs:117-119 (5000 ms)
     assert(SyncConfig().flushIntervalMs == 5000L)

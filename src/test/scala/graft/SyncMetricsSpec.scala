@@ -44,6 +44,46 @@ class SyncMetricsSpec extends SparkSpec {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("payload-derived label values are escaped: one line per series") {
+    SyncMetrics.reset()
+    import spark.implicits._
+    val app = "we\"ird\nap\\p"
+    Seq(7L, 5L).foreach(n => SyncMetrics.recordBulk(
+      Seq(("idx-1", app, n)).toDF("index", "app", "written")))
+    val lines = SyncMetrics.snapshot().linesIterator.toSeq
+    assert(lines == Seq(
+      """graft_es_write_success_total{app="we\"ird\nap\\p",index="idx-1"} 12"""),
+      lines.mkString("\n"))
+  }
+
+  test("started and terminated series of an unnamed query share one label") {
+    SyncMetrics.reset()
+    val listener = new SyncMetrics.Listener
+    spark.streams.addListener(listener)
+    try {
+      val tmp = Files.createTempDirectory("graft-listener").toString
+      spark.range(10).write.parquet(s"$tmp/src")
+      val q = spark.readStream.schema("id LONG").parquet(s"$tmp/src")
+        .writeStream.format("noop")
+        .option("checkpointLocation", s"$tmp/_checkpoint")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      assert(q.name == null)
+      q.awaitTermination(60000)
+      val label = s"""{query="${q.id}"}"""
+      val terminated = s"graft_query_terminated_total$label"
+      // listener events are delivered asynchronously
+      val deadline = System.currentTimeMillis + 30000
+      while (SyncMetrics.value(terminated) == 0 &&
+          System.currentTimeMillis < deadline) Thread.sleep(100)
+      assert(SyncMetrics.value(s"graft_query_started_total$label") == 1,
+        SyncMetrics.snapshot())
+      assert(SyncMetrics.value(terminated) == 1, SyncMetrics.snapshot())
+      assert(SyncMetrics.value(s"graft_batches_total$label") >= 1,
+        SyncMetrics.snapshot())
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("/metrics HTTP endpoint serves the prometheus-style snapshot") {
     SyncMetrics.reset()
     SyncMetrics.incBy("graft_test_total", Seq("topic" -> "web"), 42)
