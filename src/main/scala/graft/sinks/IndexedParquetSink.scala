@@ -1,8 +1,12 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.util.AccumulatorV2
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** The engine's analog of the reference's Elasticsearch bulk sink
   * (es.rs:273-316): documents are routed to time-rotated "indices" —
@@ -12,56 +16,40 @@ import org.apache.spark.sql.functions._
   *
   * At cluster scale the partitioned write IS the bulk batching: each task
   * writes its index partitions independently, and downstream consumers
-  * prune by index directory exactly like an ES index query. The
-  * exactly-once write first hashes the batch on `index`, so one task
-  * writes each index of a batch and the store gains one file per
-  * (batch, index) however widely the batch was spread before it. */
+  * prune by index directory exactly like an ES index query. A batch is
+  * written by ONE staging write that hashes it on `index` (one task, so
+  * one file, per (batch, index)) and counts written and failed docs as
+  * it passes them, the way the reference counts from the response to
+  * the bulk request that wrote them (es.rs:133-191): the batch is read
+  * once, never cached, and the metrics cost no job of their own. */
 object IndexedParquetSink {
 
-  /** Append one batch of enriched sync documents (must carry `index`,
-    * `app` columns) to the indexed store; returns per-(index, app) bulk
-    * metrics for observability. */
-  def writeBatch(batch: DataFrame, path: String): DataFrame = {
-    // Two actions run against the batch (write + metrics agg); the cache
-    // keeps the second off the source. Note: the streaming progress
-    // numInputRows still reports the batch size once per action — an
-    // accounting quirk of multi-action foreachBatch, not a double scan
-    // (sink row counts stay exact).
-    batch.cache()
-    try {
-      batch.write.mode("append").partitionBy("index").parquet(path)
-      batch.groupBy(col("index"), col("app"))
-        .agg(count(lit(1)).as("written"))
-    } finally batch.unpersist()
-  }
+  /** Staging partition column that splits written from failed docs. */
+  private val FailedFlag = "__failed"
 
-  /** [[writeBatch]] with per-item bulk failure accounting (es.rs:133-191:
-    * the reference parses the bulk response, counts failed items per
-    * index, and logs the failed payloads). `isFailed` marks the docs the
-    * bulk response would reject; they are diverted to the failed-docs
-    * store (the payload log) instead of the index, and the returned
-    * metrics carry per-(index, app) `written` AND `failed` counts. The
-    * metrics aggregate is materialized while the batch is cached, so
-    * consuming it later never rescans the source. */
-  def writeBatchAccounted(batch: DataFrame, path: String,
-      isFailed: org.apache.spark.sql.Column,
-      failedPath: Option[String] = None): DataFrame = {
-    val spark = batch.sparkSession
-    batch.cache()
-    try {
-      batch.filter(!isFailed).write.mode("append")
-        .partitionBy("index").parquet(path)
-      failedPath.foreach { fp =>
-        batch.filter(isFailed).write.mode("append")
-          .partitionBy("index").parquet(fp)
+  /** Per-(index, app) `[written, failed]` counts, added to by the
+    * staging write's tasks. Spark merges a result task's update once
+    * per partition and drops the updates of failed task attempts, so a
+    * fresh instance per write attempt counts every doc exactly once. */
+  private final class BulkCounts extends AccumulatorV2[
+      (String, String, Boolean), mutable.HashMap[(String, String), Array[Long]]] {
+    private val m = mutable.HashMap.empty[(String, String), Array[Long]]
+    def isZero: Boolean = m.isEmpty
+    def copy(): BulkCounts = {
+      val c = new BulkCounts
+      c.merge(this)
+      c
+    }
+    def reset(): Unit = m.clear()
+    def add(v: (String, String, Boolean)): Unit =
+      m.getOrElseUpdate((v._1, v._2), Array(0L, 0L))(if (v._3) 1 else 0) += 1
+    def merge(other: AccumulatorV2[(String, String, Boolean),
+        mutable.HashMap[(String, String), Array[Long]]]): Unit =
+      other.value.foreach { case (k, c) =>
+        val t = m.getOrElseUpdate(k, Array(0L, 0L))
+        t(0) += c(0); t(1) += c(1)
       }
-      val agg = batch.groupBy(col("index"), col("app"))
-        .agg(sum(when(!isFailed, 1L).otherwise(0L)).as("written"),
-          sum(when(isFailed, 1L).otherwise(0L)).as("failed"))
-      val rows = agg.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), agg.schema)
-    } finally batch.unpersist()
+    def value: mutable.HashMap[(String, String), Array[Long]] = m
   }
 
   /** EXACTLY-ONCE append of one micro-batch into the indexed store — the
@@ -79,12 +67,19 @@ object IndexedParquetSink {
     *     batch under `_staging/<batchId>`, MOVE the staged files into
     *     their `index=` directories under the batch-scoped names, then
     *     atomically rename the marker into place (create-temp + rename).
-    *     The staging write hashes the batch on `index` into the
-    *     session's core count of partitions, so ONE task writes each
-    *     index: a batch adds one `b<batchId>-k.parquet` per index it
-    *     touches, however many partitions the batch arrives in (the
-    *     explicit count also keeps AQE from coalescing the write back
-    *     into one task).
+    *
+    * The staging is ONE write of the batch: it hashes the rows on
+    * `index` into the session's core count of partitions, so one task
+    * writes each index and a batch adds one `b<batchId>-k.parquet` per
+    * index it touches, however many partitions it arrives in (the
+    * explicit count also keeps AQE from coalescing the write back into
+    * one task). `isFailed` marks the docs the bulk response would reject
+    * (es.rs:133-191; a doc it cannot classify, a null, is written): the
+    * write partitions them apart under a failed flag, and they move to
+    * `failedPath`, the failed-payload log, or are dropped when there is
+    * none. The same pass counts per-(index, app) `written` (and, with
+    * `isFailed`, `failed`) docs into an accumulator, so the returned
+    * metrics are a local relation: collecting them starts no job.
     *
     * A crash at ANY point replays into case 2 and converges: the store
     * after restart equals the batch relation exactly — no loss (the
@@ -99,24 +94,18 @@ object IndexedParquetSink {
     * and compaction. Metadata cost is O(#files in the batch) renames —
     * no data rewrite. */
   def writeBatchExactlyOnce(batch: DataFrame, path: String, batchId: Long,
-      isFailed: Option[org.apache.spark.sql.Column] = None,
+      isFailed: Option[Column] = None,
       failedPath: Option[String] = None): DataFrame = {
     val spark = batch.sparkSession
     val fs = FileSystem.get(new java.net.URI(path),
       spark.sparkContext.hadoopConfiguration)
     val marker = new Path(s"$path/_commits/$batchId")
-    val metricsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("index",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("app",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("written",
-        org.apache.spark.sql.types.LongType)) ++
-      isFailed.map(_ => org.apache.spark.sql.types.StructField("failed",
-        org.apache.spark.sql.types.LongType)))
-    def metricsDf(rows: Seq[org.apache.spark.sql.Row]): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), metricsSchema)
+    val metricsSchema = StructType(Seq(
+      StructField("index", StringType), StructField("app", StringType),
+      StructField("written", LongType)) ++
+      isFailed.map(_ => StructField("failed", LongType)))
+    def metricsDf(rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(rows.asJava, metricsSchema)
     // index/app are payload-derived strings and may legally contain tab
     // or newline (the regex app extractor admits them) — escape so a
     // hostile value can never corrupt the marker's line/field framing
@@ -151,9 +140,8 @@ object IndexedParquetSink {
         finally in.close()
       metricsDf(content.linesIterator.filter(_.nonEmpty).map { l =>
         val f = l.split("\t", -1).map(unesc)
-        if (isFailed.isDefined)
-          org.apache.spark.sql.Row(f(0), f(1), f(2).toLong, f(3).toLong)
-        else org.apache.spark.sql.Row(f(0), f(1), f(2).toLong)
+        if (isFailed.isDefined) Row(f(0), f(1), f(2).toLong, f(3).toLong)
+        else Row(f(0), f(1), f(2).toLong)
       }.toSeq)
     } else {
       // replay after a mid-batch crash (or first attempt): scrub this
@@ -166,53 +154,54 @@ object IndexedParquetSink {
       }
       scrub(path)
       failedPath.foreach(scrub)
-      batch.cache()
-      try {
-        def stageAndMove(df: DataFrame, root: String): Unit = {
-          val staging = s"$root/_staging/$batchId"
-          df.repartition(spark.sparkContext.defaultParallelism, col("index"))
-            .write.mode("overwrite").partitionBy("index").parquet(staging)
-          var k = 0
-          fs.globStatus(new Path(s"$staging/index=*/part-*"))
-            .sortBy(_.getPath.toString).foreach { s =>
-              val idxDir = new Path(s"$root/${s.getPath.getParent.getName}")
-              fs.mkdirs(idxDir)
-              if (!fs.rename(s.getPath,
-                  new Path(idxDir, s"b$batchId-$k.parquet")))
-                throw new IllegalStateException(
-                  s"commit move failed for ${s.getPath}")
-              k += 1
-            }
-          fs.delete(new Path(s"$root/_staging/$batchId"), true)
+      // a fresh accumulator per attempt: a died attempt's counts are
+      // never merged into this one
+      val counts = new BulkCounts
+      spark.sparkContext.register(counts)
+      val tally = udf { (index: String, app: String, failed: Boolean) =>
+        counts.add((index, app, failed)); failed
+      }.asNondeterministic()
+      val flag = isFailed.fold(lit(false))(c => coalesce(c, lit(false)))
+      // the tally sits after the hash, in the write's result stage
+      val staging = s"$path/_staging/$batchId"
+      batch.repartition(spark.sparkContext.defaultParallelism, col("index"))
+        .withColumn(FailedFlag, tally(col("index"), col("app"), flag))
+        .write.mode("overwrite").partitionBy(FailedFlag, "index")
+        .parquet(staging)
+      var k = 0
+      fs.globStatus(new Path(s"$staging/$FailedFlag=*/index=*/part-*"))
+        .sortBy(_.getPath.toString).foreach { s =>
+          val idx = s.getPath.getParent
+          val root =
+            if (idx.getParent.getName == s"$FailedFlag=true") failedPath
+            else Some(path)
+          root.foreach { r =>
+            val idxDir = new Path(s"$r/${idx.getName}")
+            fs.mkdirs(idxDir)
+            if (!fs.rename(s.getPath, new Path(idxDir, s"b$batchId-$k.parquet")))
+              throw new IllegalStateException(
+                s"commit move failed for ${s.getPath}")
+            k += 1
+          }
         }
-        isFailed match {
-          case Some(cond) =>
-            stageAndMove(batch.filter(!cond), path)
-            failedPath.foreach(fp => stageAndMove(batch.filter(cond), fp))
-          case None => stageAndMove(batch, path)
-        }
-        val agg = isFailed match {
-          case Some(cond) => batch.groupBy(col("index"), col("app"))
-            .agg(sum(when(!cond, 1L).otherwise(0L)).as("written"),
-              sum(when(cond, 1L).otherwise(0L)).as("failed"))
-          case None => batch.groupBy(col("index"), col("app"))
-            .agg(count(lit(1)).as("written"))
-        }
-        val rows = agg.collect().toIndexedSeq
-        // marker last, atomically: temp file + rename — the commit point
-        val tmp = new Path(s"$path/_commits/.tmp-$batchId")
-        fs.mkdirs(new Path(s"$path/_commits"))
-        val outS = fs.create(tmp, true)
-        try outS.write(rows.map(r => r.toSeq.map {
-            case s: String => esc(s)
-            case v => String.valueOf(v)
-          }.mkString("\t"))
-          .mkString("", "\n", "\n").getBytes("UTF-8"))
-        finally outS.close()
-        if (!fs.rename(tmp, marker))
-          throw new IllegalStateException(s"marker rename failed for $marker")
-        metricsDf(rows)
-      } finally batch.unpersist()
+      fs.delete(new Path(staging), true)
+      val rows = counts.value.toSeq.map { case ((index, app), c) =>
+        if (isFailed.isDefined) Row(index, app, c(0), c(1))
+        else Row(index, app, c(0))
+      }
+      // marker last, atomically: temp file + rename — the commit point
+      val tmp = new Path(s"$path/_commits/.tmp-$batchId")
+      fs.mkdirs(new Path(s"$path/_commits"))
+      val outS = fs.create(tmp, true)
+      try outS.write(rows.map(r => r.toSeq.map {
+          case s: String => esc(s)
+          case v => String.valueOf(v)
+        }.mkString("\t"))
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally outS.close()
+      if (!fs.rename(tmp, marker))
+        throw new IllegalStateException(s"marker rename failed for $marker")
+      metricsDf(rows)
     }
   }
 
@@ -239,7 +228,9 @@ object IndexedParquetSink {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Metrics accumulated across batches (driver-side small aggregate). */
+  /** Read the indexed store: every committed doc, with `index` as a
+    * partition column (underscore dirs — markers, staging, the failed
+    * log — are not read). */
   def readIndexed(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 }

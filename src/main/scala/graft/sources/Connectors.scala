@@ -64,17 +64,16 @@ object Connectors {
   /** Sink seam: write one admitted micro-batch to the index target,
     * return per-(index, app) bulk metrics. `isFailed` marks docs the
     * bulk response would reject (diverted to `failedTarget`, counted in
-    * a `failed` metrics column) — es.rs:133-191 semantics. `batchId`,
-    * when present, makes the write idempotent under checkpoint replay
-    * (the ES connector gets this for free from doc-id upserts; the
-    * parquet store uses the commit-marker protocol of
+    * a `failed` metrics column) — es.rs:133-191 semantics. `batchId`
+    * makes the write idempotent under checkpoint replay (the ES
+    * connector gets this for free from doc-id upserts; the parquet
+    * store uses the commit-marker protocol of
     * [[graft.sinks.IndexedParquetSink.writeBatchExactlyOnce]]). */
   trait BulkSinkConnector {
     def name: String
-    def writeBatch(batch: DataFrame, target: String,
+    def writeBatch(batch: DataFrame, target: String, batchId: Long,
         isFailed: Option[Column] = None,
-        failedTarget: Option[String] = None,
-        batchId: Option[Long] = None): DataFrame
+        failedTarget: Option[String] = None): DataFrame
   }
 
   /** Parquet-file message stream (the driver-data stand-in for the
@@ -108,18 +107,10 @@ object Connectors {
     * partition directory = index). */
   object IndexedParquetBulk extends BulkSinkConnector {
     val name = "indexed-parquet"
-    def writeBatch(batch: DataFrame, target: String,
-        isFailed: Option[Column], failedTarget: Option[String],
-        batchId: Option[Long]): DataFrame =
-      batchId match {
-        case Some(id) => graft.sinks.IndexedParquetSink
-          .writeBatchExactlyOnce(batch, target, id, isFailed, failedTarget)
-        case None => isFailed match {
-          case Some(cond) => graft.sinks.IndexedParquetSink
-            .writeBatchAccounted(batch, target, cond, failedTarget)
-          case None => graft.sinks.IndexedParquetSink.writeBatch(batch, target)
-        }
-      }
+    def writeBatch(batch: DataFrame, target: String, batchId: Long,
+        isFailed: Option[Column], failedTarget: Option[String]): DataFrame =
+      graft.sinks.IndexedParquetSink
+        .writeBatchExactlyOnce(batch, target, batchId, isFailed, failedTarget)
   }
 
   private val sources = Seq(ParquetMessages, JsonLinesMessages)

@@ -106,13 +106,14 @@ object StreamingSync {
         // replay (commit-marker protocol): a replayed batch skips if
         // committed, scrubs-and-rewrites if it died mid-write
         val metrics = IndexedParquetSink.withRetries(maxRetries) { () =>
-          sink.writeBatch(admitted, sinkPath,
+          sink.writeBatch(admitted, sinkPath, batchId,
             failedDocPattern.map(p =>
               org.apache.spark.sql.functions.col("data").rlike(p)),
-            failedDocPattern.map(_ => s"$sinkPath/_failed"),
-            batchId = Some(batchId))
+            failedDocPattern.map(_ => s"$sinkPath/_failed"))
         }
-        // prometheus-style counters are observability: at-least-once
+        // the sink counted `metrics` in its write pass and returns them
+        // as a local relation: recording them starts no Spark job.
+        // Prometheus-style counters are observability: at-least-once
         // under a post-marker-crash replay is acceptable (and matches
         // the reference's counter semantics). The metrics STORE is not:
         // it feeds written==stored audits, so each batch OVERWRITES its
@@ -124,7 +125,9 @@ object StreamingSync {
         // append-at-root layout must be drained before pointing the
         // sync at it (mixed layouts fail partition discovery).
         SyncMetrics.recordBulk(metrics)
-        metrics.withColumn("batch_id",
+        // one file per batch: the local relation would scan in up to
+        // one partition per core
+        metrics.coalesce(1).withColumn("batch_id",
             org.apache.spark.sql.functions.lit(batchId))
           .write.mode("overwrite").parquet(s"$metricsPath/bid=$batchId")
         ()

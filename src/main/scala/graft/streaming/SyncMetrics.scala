@@ -9,9 +9,10 @@ import java.util.concurrent.atomic.LongAdder
   * reference's prometheus registry (prometheus.rs): monotonically
   * increasing totals, scrape-able as a text snapshot. Progress-level
   * counters (rows in/processed, batch count) come from the
-  * StreamingQueryListener; per-(index, app) written totals are fed by the
-  * sink's bulk-metrics DataFrame (IndexedParquetSink.writeBatch). All
-  * driver-side state is O(#labels) — counters only, never rows. */
+  * StreamingQueryListener; per-(index, app) written and failed totals
+  * are fed by the bulk metrics that the sink's write pass counts
+  * (IndexedParquetSink.writeBatchExactlyOnce). All driver-side state is
+  * O(#labels) — counters only, never rows. */
 object SyncMetrics {
 
   private val counters = new ConcurrentHashMap[String, LongAdder]()

@@ -18,7 +18,8 @@ import java.nio.file.{Files, Paths}
   * structure, so dedup-family queries would honestly show a quadratic
   * pair component that says something about the DATA, not the plan;
   * the dedup scaling story is the banded-join argument in SURVEY §6.
-  * Usage: runMain graft.tools.ScaleProbe [replicas] [reps] */
+  * Usage: runMain graft.tools.ScaleProbe [replicas] [reps]
+  * (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in Bench). */
 object ScaleProbe {
 
   val probes: Seq[String] = Seq(
@@ -137,7 +138,7 @@ object ScaleProbe {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val baseDir = "/root/testdata/sf0.1"
+    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .appName("graft-scale-probe")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -349,10 +349,10 @@ class StreamingSyncSpec extends SparkSpec {
       val name = "crash-once"
       @volatile var fired = false
       def writeBatch(batch: org.apache.spark.sql.DataFrame, target: String,
+          batchId: Long,
           isFailed: Option[org.apache.spark.sql.Column],
-          failedTarget: Option[String],
-          batchId: Option[Long]): org.apache.spark.sql.DataFrame = {
-        if (!fired && batchId.exists(_ >= 1)) {
+          failedTarget: Option[String]): org.apache.spark.sql.DataFrame = {
+        if (!fired && batchId >= 1) {
           fired = true
           // leave exactly the wreckage a crashed commit-move leaves:
           // some b<id>-* files in their index dirs, NO marker
@@ -364,13 +364,13 @@ class StreamingSyncSpec extends SparkSpec {
               val idxDir = new Path(s"$target/${s0.getPath.getParent.getName}")
               fs.mkdirs(idxDir)
               fs.rename(s0.getPath,
-                new Path(idxDir, s"b${batchId.get}-orphan$i.parquet"))
+                new Path(idxDir, s"b$batchId-orphan$i.parquet"))
             }
           fs.delete(new Path(stage), true)
           throw new RuntimeException("injected mid-batch crash")
         }
-        Connectors.IndexedParquetBulk.writeBatch(batch, target, isFailed,
-          failedTarget, batchId)
+        Connectors.IndexedParquetBulk.writeBatch(batch, target, batchId,
+          isFailed, failedTarget)
       }
     }
 
